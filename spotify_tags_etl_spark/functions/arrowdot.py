@@ -69,13 +69,18 @@ def pair_dot_int64(
                     f"pair_dot_int64: null {a_col}/{b_col} rows are not "
                     "part of the quantized-pair contract"
                 )
-            av = a.flatten().to_numpy(zero_copy_only=False)
-            bv = b.flatten().to_numpy(zero_copy_only=False)
-            if av.size != bv.size or av.size % n:
+            # Per-row widths from the offsets: equal totals alone would let
+            # widths (3, 1) vs (1, 3) reshape into wrong pairs.
+            wa = np.diff(a.offsets.to_numpy(zero_copy_only=False))
+            wb = np.diff(b.offsets.to_numpy(zero_copy_only=False))
+            if not (np.array_equal(wa, wb) and (wa == wa[0]).all()):
                 raise ValueError(
                     f"pair_dot_int64: ragged {a_col}/{b_col} widths "
-                    f"({av.size}, {bv.size} values over {n} rows)"
+                    f"(per-row {a_col} {sorted(set(wa.tolist()))}, "
+                    f"{b_col} {sorted(set(wb.tolist()))} over {n} rows)"
                 )
+            av = a.flatten().to_numpy(zero_copy_only=False)
+            bv = b.flatten().to_numpy(zero_copy_only=False)
             dp = np.einsum(
                 "ij,ij->i", av.reshape(n, -1), bv.reshape(n, -1)
             )

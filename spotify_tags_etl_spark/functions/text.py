@@ -30,17 +30,20 @@ _WS_RE = re.compile(r"\s+")
 
 
 def normalize_text(text: str | None) -> str | None:
-    """Strip symbols (keep ``,.:-``), collapse whitespace, trim, deaccent.
+    """Deaccent, strip symbols (keep ``,.:-``), collapse whitespace, trim.
 
     Deaccent = Unicode NFD decomposition with combining marks dropped
     ('Björk' → 'Bjork'), matching reference ``spotify_client.py:181-202``.
+    It runs first so the result is idempotent: dropping a mark can leave
+    two spaces to collapse ('a \u0301 b'), and NFD can produce a stripped
+    symbol ('\u037e', GREEK QUESTION MARK, decomposes to ';').
     """
     if text is None:
         return None
-    out = _STRIP_RE.sub("", text)
-    out = _WS_RE.sub(" ", out).strip()
-    out = unicodedata.normalize("NFD", out)
-    return "".join(ch for ch in out if not unicodedata.combining(ch))
+    out = unicodedata.normalize("NFD", text)
+    out = "".join(ch for ch in out if not unicodedata.combining(ch))
+    out = _STRIP_RE.sub("", out)
+    return _WS_RE.sub(" ", out).strip()
 
 
 def _lcs_len(a: str, b: str) -> int:

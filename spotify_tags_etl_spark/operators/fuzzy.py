@@ -155,23 +155,23 @@ def q29(spark, sf_dir: str) -> DataFrame:
 #: with the same prefix-max trick as functions/text.py:_lcs_len — the
 #: elementwise max(prev[j], prev[j-1]+match) followed by a running max,
 #: done with list_transform + a list_reduce fold (list-typed accumulator).
-#: Normalization mirrors normalize_text: symbol strip keeping ,.:- →
-#: whitespace collapse → trim → deaccent → lower (ASCII corpus, so
+#: Normalization mirrors normalize_text: deaccent → symbol strip keeping
+#: ,.:- → whitespace collapse → trim → lower (ASCII corpus, so
 #: strip_accents ≡ NFD-drop-combining).
 _Q30_ORACLE = r"""
 WITH RECURSIVE
 kw AS (
   SELECT p_partkey, p_name,
-         lower(strip_accents(trim(regexp_replace(
-           regexp_replace(p_name, '[!"#$%&''()*+/;<=>?@\[\\\]^_`{|}~]', '', 'g'),
-           '\s+', ' ', 'g')))) AS a
+         lower(trim(regexp_replace(
+           regexp_replace(strip_accents(p_name), '[!"#$%&''()*+/;<=>?@\[\\\]^_`{|}~]', '', 'g'),
+           '\s+', ' ', 'g'))) AS a
   FROM part WHERE p_partkey % 200 = 0
 ),
 cand AS (
   SELECT s_name,
-         lower(strip_accents(trim(regexp_replace(
-           regexp_replace(s_name, '[!"#$%&''()*+/;<=>?@\[\\\]^_`{|}~]', '', 'g'),
-           '\s+', ' ', 'g')))) AS b
+         lower(trim(regexp_replace(
+           regexp_replace(strip_accents(s_name), '[!"#$%&''()*+/;<=>?@\[\\\]^_`{|}~]', '', 'g'),
+           '\s+', ' ', 'g'))) AS b
   FROM supplier
 ),
 dp(p_partkey, p_name, s_name, a, b, i, row) AS (

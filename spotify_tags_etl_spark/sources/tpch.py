@@ -13,13 +13,30 @@ Scale notes (100 TB design point):
 * At cluster scale these would be directory-partitioned datasets
   (``orders/o_orderdate=.../``); the loader takes any path, so swapping a
   partitioned root in requires no call-site change.
+* Schema inference runs at most once per file version. A bare
+  ``spark.read.parquet(path)`` starts a footer-reading Spark job on every
+  call; :func:`parquet_schema` instead keeps a process-wide cache of the
+  inferred ``StructType`` (never a DataFrame: each load must still build a
+  fresh relation with fresh attribute IDs, or ``a["k"] == b["k"]``
+  self-joins turn trivially true) and later loads use
+  ``spark.read.schema(cached).parquet(path)``, which starts no job.
+  The key is the real path plus the session confs that change the inferred
+  schema (:data:`SCHEMA_CONFS`). Each entry stores a stat fingerprint
+  (``st_ino``, ``st_mtime_ns``, ``st_size``; for a directory, of every
+  data file under it); a mismatch re-infers and replaces the entry, so a
+  fixture regenerated in place with a new ``ts`` encoding is picked up.
+  One entry per key (a new file version replaces it, nothing is evicted),
+  one lock around the dict. Paths that cannot be stat'ed locally (object
+  stores, missing files) are read uncached.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampNTZType
 
 TPCH_TABLES = (
     "region",
@@ -38,6 +55,61 @@ TPCH_TABLES = (
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: Session confs whose values change the schema Spark infers from a
+#: parquet footer; part of the schema-cache key.
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+_schema_lock = threading.Lock()
+#: (real path, conf values) -> (stat fingerprint, inferred schema)
+_schema_cache: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(real: str) -> tuple | None:
+    """Stat fingerprint of a parquet file, or of every data file under a
+    directory (Spark skips ``_``/``.``-prefixed entries, and so does this).
+    ``None`` when the path cannot be stat'ed locally."""
+    try:
+        if not os.path.isdir(real):
+            st = os.stat(real)
+            return (st.st_ino, st.st_mtime_ns, st.st_size)
+        files = []
+        for root, dirs, names in os.walk(real):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            for n in sorted(names):
+                if not n.startswith(("_", ".")):
+                    st = os.stat(os.path.join(root, n))
+                    files.append((os.path.join(root, n), st.st_ino, st.st_mtime_ns, st.st_size))
+        return tuple(files)
+    except OSError:
+        return None
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, inferred at most
+    once per file version and session-conf combination (module docstring)."""
+    real = os.path.realpath(path)
+    stamp = _fingerprint(real)
+    if stamp is None:
+        return spark.read.parquet(path).schema
+    key = (real, tuple(spark.conf.get(k) for k in SCHEMA_CONFS))
+    with _schema_lock:
+        hit = _schema_cache.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    # Infer outside the lock: a concurrent miss on the same path only
+    # repeats the footer read, it never blocks other tables' loads. The
+    # stamp predates the read, so a file replaced mid-read re-infers next time.
+    schema = spark.read.parquet(path).schema
+    with _schema_lock:
+        _schema_cache[key] = (stamp, schema)
+    return schema
 
 
 def ensure_session_defaults(spark: SparkSession) -> None:
@@ -111,7 +183,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # (driver harness, notebooks), not only sessions built by our
         # session.py factory.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     else:
@@ -119,7 +193,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # encodings on ANY table. The session tz is pinned UTC above, so
         # NTZ→TIMESTAMP is value-stable, and DuckDB (which reads the same
         # parquet naively) renders identical wall-clock digits either way.
-        ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
+        ntz = [f.name for f in schema.fields if isinstance(f.dataType, TimestampNTZType)]
         if ntz:
             from pyspark.sql import functions as F
 

@@ -72,7 +72,7 @@ def read_table_stream(
     events-specific timestamp normalization)."""
     import hashlib
 
-    from ..sources.tpch import ensure_session_defaults
+    from ..sources.tpch import ensure_session_defaults, parquet_schema
 
     path = os.path.join(sf_dir, f"{name}.parquet")
     stream_dir = os.path.join(
@@ -92,7 +92,7 @@ def read_table_stream(
             "spark.sql.shuffle.partitions",
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
         )
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -102,8 +102,9 @@ def read_table_stream(
 def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """Streaming scan of the events table: file-source micro-batches.
 
-    Schema comes from one batch footer read (streaming sources require
-    an explicit schema); the ``ts`` column is normalized to a TIMESTAMP
+    Schema comes from the loader's schema cache (streaming sources require
+    an explicit schema; sources/tpch.py:parquet_schema infers it once per
+    file version); the ``ts`` column is normalized to a TIMESTAMP
     instant + bigint ``ts_ns`` exactly as the batch loader does
     (sources/tpch.py:normalize_events_ts), whatever the fixture encoding.
     """
@@ -130,7 +131,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: 
     # TIMESTAMP(NANOS) physical type needs this runtime conf on ANY session,
     # and event-time windows/date_format must render in UTC to match the
     # naive-UTC DuckDB oracles regardless of the driver JVM's default TZ.
-    from ..sources.tpch import ensure_session_defaults, normalize_events_ts
+    from ..sources.tpch import ensure_session_defaults, normalize_events_ts, parquet_schema
 
     ensure_session_defaults(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -147,7 +148,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: 
             "spark.sql.shuffle.partitions",
             _os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
         )
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

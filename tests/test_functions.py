@@ -28,6 +28,11 @@ class TestNormalize:
     def test_deaccent(self):
         assert normalize_text("Björk") == "Bjork"
         assert normalize_text("Ólafur Brekka") == "Olafur Brekka"
+        # Deaccent runs before the strip and the collapse: a lone combining
+        # mark between spaces leaves one space, and a char whose NFD form is
+        # a stripped symbol (GREEK QUESTION MARK -> ';') is stripped.
+        assert normalize_text("a \u0301 b") == "a b"
+        assert normalize_text("a\u037e") == "a"
 
     def test_symbol_strip_keeps_comma_dot_colon_dash(self):
         assert normalize_text("Sallie Ford & The Sound Outside") == "Sallie Ford The Sound Outside"

@@ -82,6 +82,14 @@ def test_pair_dot_rejects_nulls_and_ragged_loudly(spark):
     )
     with pytest.raises(Exception, match="pair_dot_int64"):
         pair_dot_int64(ragged, "a", "b", "dp").collect()
+    # Widths (3, 1) vs (1, 3) in ONE batch have equal value totals (4 and
+    # 4, divisible by 2 rows); only the per-row offsets tell them apart.
+    swapped = spark.createDataFrame(
+        [(1, [1, 2, 3], [1]), (2, [4], [1, 2, 3])],
+        "id bigint, a array<bigint>, b array<bigint>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="pair_dot_int64: ragged"):
+        pair_dot_int64(swapped, "a", "b", "dp").collect()
 
 
 # ---------------------------------------------------------------------------
